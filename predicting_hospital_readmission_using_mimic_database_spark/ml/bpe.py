@@ -407,23 +407,10 @@ def bpe_train(
     # same way, so callers only ever see their own session's frames.
     import uuid
 
-    base_sess = df.sparkSession
-    # tune_session first: newSession() starts from builder-time confs
-    # only, so the engine's runtime confs (nanos-as-long parquet,
-    # python-source filter pushdown, data-source registration) would
-    # otherwise be lost under the clone (see session.loop_session)
-    from ..session import tune_session as _tune
+    from ..session import _clone_session
 
-    sess = _tune(base_sess.newSession())
-    sess.conf.set(
-        "spark.sql.session.timeZone",
-        base_sess.conf.get("spark.sql.session.timeZone"),
-    )
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    sess.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(1, vocab.rdd.getNumPartitions())),
-    )
+    base_sess = df.sparkSession
+    sess = _clone_session(base_sess, max(1, vocab.rdd.getNumPartitions()))
     handoff = f"bpe_vocab_{uuid.uuid4().hex}"
     vocab.createOrReplaceGlobalTempView(handoff)
     try:

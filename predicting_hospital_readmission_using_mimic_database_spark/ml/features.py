@@ -107,20 +107,6 @@ def get_dummies(df: DataFrame, col: str, values: Sequence[str], prefix: str | No
     )
 
 
-def one_hot_encode(df: DataFrame, cols: Sequence[str], out_suffix: str = "_oh"):
-    """M2 (vector form) — StringIndexer + OneHotEncoder pipeline; returns
-    (pipeline_model, transformed)."""
-    from pyspark.ml import Pipeline
-    from pyspark.ml.feature import OneHotEncoder, StringIndexer
-
-    stages = []
-    for c in cols:
-        stages.append(StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep"))
-        stages.append(OneHotEncoder(inputCol=f"{c}_idx", outputCol=f"{c}{out_suffix}"))
-    model = Pipeline(stages=stages).fit(df)
-    return model, model.transform(df)
-
-
 def tfidf(
     docs: DataFrame,
     id_col: str = "doc_id",

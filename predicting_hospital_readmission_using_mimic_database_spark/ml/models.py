@@ -236,14 +236,6 @@ def chi2_scores(df: DataFrame, cols: Sequence[str], label: str) -> DataFrame:
     )
 
 
-def chi2_mllib(df: DataFrame, features: str, label: str) -> DataFrame:
-    """M9 (MLlib form) — ``pyspark.ml.stat.ChiSquareTest`` for parity
-    checks against :func:`chi2_scores` on indexed categorical vectors."""
-    from pyspark.ml.stat import ChiSquareTest
-
-    return ChiSquareTest.test(df, features, label, flatten=True)
-
-
 def top_n_by_score(scores: DataFrame, n: int, score_col: str = "mi") -> list[str]:
     """M10 helper — top-n feature names by score (deterministic tiebreak on
     name). Feature count is human-scale: the only intentional collect."""

@@ -279,13 +279,6 @@ def lead_col(
     return df.withColumn(out or f"next_{col}", F.lead(col, offset).over(_window(partition, order)))
 
 
-def null_out_when(df: DataFrame, cond: Column, cols: Sequence[str]) -> DataFrame:
-    """W3 — conditional NULL-out of several columns (py:48-50)."""
-    for c in cols:
-        df = df.withColumn(c, F.when(cond, F.lit(None)).otherwise(F.col(c)))
-    return df
-
-
 def backfill(
     df: DataFrame,
     col: str,
@@ -380,15 +373,6 @@ def conditional_counts(df: DataFrame, conds: dict[str, Column]) -> DataFrame:
 def group_min(df: DataFrame, keys: Sequence[str], col: str, out: str) -> DataFrame:
     """A6 — per-group min (py:199-200, first admission per patient)."""
     return df.groupBy(*keys).agg(F.min(col).alias(out))
-
-
-def collect_sorted_csv(df: DataFrame, keys: Sequence[str], col: str, out: str) -> DataFrame:
-    """A7 — collect-to-list per group (py:156). ``collect_list`` order is
-    partition-dependent, so the engine DEFINES the semantics as the sorted
-    list; exposed as a CSV string for stable cross-engine comparison."""
-    return df.groupBy(*keys).agg(
-        F.array_join(F.array_sort(F.collect_list(col)), ",").alias(out)
-    )
 
 
 def pivot_count(

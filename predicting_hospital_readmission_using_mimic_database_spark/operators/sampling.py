@@ -65,17 +65,6 @@ def stratified_split(
     return train, test
 
 
-def undersample_exact(df: DataFrame, n: int, seed: int = 42) -> DataFrame:
-    """U4 — exact-n uniform sample (py:447 ``sample(n=...)``):
-    rand-ordered top-n, compiled to TakeOrderedAndProject (per-partition
-    top-n, then merge of n-row heaps — no global sort of the input, but
-    the final merge materializes all n rows on ONE task). Use for
-    human-scale n; for n that is itself big data (billions of minority
-    rows at 100 TB) use :func:`undersample_fraction` — approximate n,
-    fully map-side."""
-    return df.orderBy(F.rand(seed)).limit(n)
-
-
 def undersample_fraction(
     df: DataFrame, n: int, seed: int = 42, total: int | None = None
 ) -> DataFrame:

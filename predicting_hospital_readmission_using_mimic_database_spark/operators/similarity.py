@@ -354,45 +354,6 @@ def topk_bruteforce(
     return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
 
 
-def topk_bruteforce_many(
-    df: DataFrame,
-    id_col: str,
-    array_col: str,
-    probes: DataFrame,
-    probe_id: str,
-    probe_array: str,
-    k: int = 10,
-) -> DataFrame:
-    """Exact cosine top-k per probe row: broadcast the probe set, score
-    every (probe, item) pair, keep k per probe via a per-probe window
-    (partitioned by probe — parallel across probes)."""
-    from pyspark.sql import Window
-
-    scored = df.crossJoin(
-        F.broadcast(
-            probes.select(
-                F.col(probe_id).alias("__pid"), F.col(probe_array).alias("__pv")
-            )
-        )
-    ).select(
-        "__pid",
-        F.col(id_col),
-        F.round(
-            cosine(
-                F.col(array_col).cast("array<double>"),
-                F.col("__pv").cast("array<double>"),
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("__pid").orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(F.col("__pid").alias(probe_id), id_col, "cosine", F.col("__rn").alias("rank"))
-    )
-
-
 def cell_radii(assigned: DataFrame, centers, array_col: str = "__arr") -> list[float]:
     """Per-cell angular radius of an IVF assignment: the max angle between
     a cell's (unit) members and its unit-normalized centroid — ONE

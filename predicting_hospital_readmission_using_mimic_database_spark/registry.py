@@ -58,6 +58,10 @@ _LOADED = False
 # then (b) one stable sentinel per family prefix, ROTATED off round
 # 14's picks
 # (tests/test_entry.py::test_first_50_entries_cover_every_family).
+# Every writer the (a) groups exercise — the SnapshotTable, Delta,
+# Iceberg and Hudi commits behind the DML, publish and maintenance
+# entries — claims its log entry through the one optimistic-commit
+# seam in sources/commit.py, so those entries also guard that seam.
 PRIORITY: tuple[str, ...] = (
     # (a) row-level DML under the small-plan gate (+ batched fixture)
     "s80_delta_delete_dv",

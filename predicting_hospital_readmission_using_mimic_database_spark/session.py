@@ -93,6 +93,41 @@ def get_spark(
 from contextlib import contextmanager  # noqa: E402
 
 
+def _clone_session(
+    base: SparkSession, shuffle_partitions: int | None,
+    skew_join: bool = False,
+) -> SparkSession:
+    """The one spelling of "clone the session" that :func:`loop_session`,
+    :func:`small_plan_spark` and the BPE trainer share: ``newSession()``
+    brought to the engine baseline by :func:`tune_session`, the base's
+    time zone re-applied, AQE off (or, with ``skew_join``, kept on for
+    skew splitting with coalescing off), and the shuffle partitions
+    pinned when ``shuffle_partitions`` is given."""
+    sess = tune_session(base.newSession())
+    sess.conf.set(
+        "spark.sql.session.timeZone",
+        base.conf.get("spark.sql.session.timeZone"),
+    )
+    if skew_join:
+        # keep AQE (skew-join splitting needs it) but pin partitions
+        # exactly: coalescing would undo the input-derived pin
+        sess.conf.set(
+            "spark.sql.adaptive.coalescePartitions.enabled", "false"
+        )
+        # split skewed partitions even when that adds an extra shuffle
+        sess.conf.set(
+            "spark.sql.adaptive.forceOptimizeSkewedJoin", "true"
+        )
+    else:
+        sess.conf.set("spark.sql.adaptive.enabled", "false")
+    if shuffle_partitions:
+        sess.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(max(1, int(shuffle_partitions))),
+        )
+    return sess
+
+
 @contextmanager
 def loop_session(
     *frames,
@@ -143,28 +178,7 @@ def loop_session(
     import uuid
 
     base = frames[0].sparkSession
-    sess = tune_session(base.newSession())
-    sess.conf.set(
-        "spark.sql.session.timeZone",
-        base.conf.get("spark.sql.session.timeZone"),
-    )
-    if skew_join:
-        # keep AQE (skew-join splitting needs it) but pin partitions
-        # exactly: coalescing would undo the input-derived pin
-        sess.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", "false"
-        )
-        # split skewed partitions even when that adds an extra shuffle
-        sess.conf.set(
-            "spark.sql.adaptive.forceOptimizeSkewedJoin", "true"
-        )
-    else:
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-    if shuffle_partitions:
-        sess.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(1, int(shuffle_partitions))),
-        )
+    sess = _clone_session(base, shuffle_partitions, skew_join=skew_join)
     tag = f"loop_{uuid.uuid4().hex}"
     names: list[str] = []
     try:
@@ -220,9 +234,7 @@ def warm_streaming(spark: SparkSession, timeout_s: int = 60) -> None:
 #: plans — the at-scale regime — keep the caller's session untouched:
 #: runtime coalescing and skew splitting earn their latency there. The
 #: gate is BYTES (scale-adaptive), never the core count.
-_SMALL_PLAN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SMALL_PLAN_BYTES", str(256 * 1024 * 1024))
-)
+_SMALL_PLAN_BYTES = 256 * 1024 * 1024
 _PLAN_PARTITION_BYTES = 128 * 1024 * 1024
 
 
@@ -241,10 +253,9 @@ def small_plan_session(*frames, est_bytes: int | None):
     table's own log/listing plus row-count × schema width — both known
     without running a job), yield an AQE-off clone with an
     input-derived partition pin and ``frames`` re-bound to it; when the
-    estimate is missing or exceeds ``$SPARK_GRAFT_SMALL_PLAN_BYTES``
-    (default 256 MB), yield the frames' own session unchanged so big
-    plans keep AQE's runtime re-planning. Yields ``(sess, clones)``
-    either way."""
+    estimate is missing or exceeds ``_SMALL_PLAN_BYTES`` (256 MB),
+    yield the frames' own session unchanged so big plans keep AQE's
+    runtime re-planning. Yields ``(sess, clones)`` either way."""
     if est_bytes is None or est_bytes > _SMALL_PLAN_BYTES:
         yield frames[0].sparkSession, list(frames)
         return
@@ -266,14 +277,7 @@ def small_plan_spark(
     needed (the clone is garbage once the op returns)."""
     if est_bytes is None or est_bytes > _SMALL_PLAN_BYTES:
         return spark
-    sess = tune_session(spark.newSession())
-    sess.conf.set(
-        "spark.sql.session.timeZone",
-        spark.conf.get("spark.sql.session.timeZone"),
-    )
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    sess.conf.set("spark.sql.shuffle.partitions", str(_plan_pin(est_bytes)))
-    return sess
+    return _clone_session(spark, _plan_pin(est_bytes))
 
 
 def adopt_frame(base: SparkSession, df):

@@ -65,6 +65,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .commit import Retry, claim, optimistic_commit
+
 DELTA_LOG_DIR = "_delta_log"
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 #: classic checkpoints: n.checkpoint.parquet or n.checkpoint.<part>.<of>.parquet
@@ -1050,27 +1052,15 @@ def _declared_protocol(log_dir: str) -> dict | None:
 
 
 def _publish_commit(log_dir: str, version: int, actions: list[dict]) -> bool:
-    """ATOMICALLY claim ``{version}.json`` — Delta's commit rule is
-    put-if-absent on the version file (the spec's optimistic
-    concurrency): stage the actions to a temp file, then hard-link it
-    to the final name, which fails atomically when a FOREIGN writer
-    already took the version. Returns False on that loss (the caller
-    rebases and retries); a plain ``os.replace`` here would silently
-    CLOBBER the foreign commit."""
-    import uuid
-
-    tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        for action in actions:
-            f.write(json.dumps(action) + "\n")
-    final = os.path.join(log_dir, f"{version:020d}.json")
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        return False
-    finally:
-        os.remove(tmp)
-    return True
+    """Claim ``{version}.json`` — Delta's commit rule is put-if-absent
+    on the version file (the spec's optimistic concurrency), done by
+    the shared seam :func:`.commit.claim` (``sources/commit.py``).
+    Returns False when a FOREIGN writer already took the version (the
+    caller rebases and retries); its commit is never clobbered."""
+    return claim(
+        os.path.join(log_dir, f"{version:020d}.json"),
+        lambda f: f.writelines(json.dumps(a) + "\n" for a in actions),
+    )
 
 
 def _commit_actions(log_dir: str, version: int) -> list[dict]:
@@ -1125,10 +1115,20 @@ def _ict_commit_info(
     }
 
 
+def _commit_info(
+    log_dir: str, version: int, operation: str, ict_on: bool
+) -> dict:
+    """A commit's commitInfo action: ICT-stamped on logs that declare
+    in-commit timestamps, plain otherwise."""
+    if ict_on:
+        return _ict_commit_info(log_dir, version, operation=operation)
+    return {"commitInfo": {"operation": operation,
+                           "engineInfo": "snapshot-export"}}
+
+
 def export_delta_log(
     table, checkpoint_interval: int = 10,
     checkpoint_v2_threshold: int = 10_000,
-    _retries: int = 10,
 ) -> int:
     """Publish a :class:`~.table.SnapshotTable`'s CURRENT snapshot as a
     real ``_delta_log`` under the table root, so any Delta client
@@ -1159,9 +1159,26 @@ def export_delta_log(
     ``partitionValues`` — semantically correct for any reader; bucket
     locality is an engine-side read optimization, not table state.
     Driver-side metadata only (KBs per commit).
-    """
-    import uuid
 
+    A FOREIGN writer claiming the version first (exported logs are real
+    Delta tables — other engines may commit to them) makes the export
+    re-run whole: it re-replays the log INCLUDING the foreign commit
+    and re-diffs against the current snapshot — an export is always a
+    diff-to-current, so it rebases cleanly over any foreign action
+    (Delta's optimistic concurrency loop, bounded by the commit seam).
+    """
+    return optimistic_commit(
+        lambda: _export_delta_attempt(
+            table, checkpoint_interval, checkpoint_v2_threshold
+        )
+    )
+
+
+def _export_delta_attempt(
+    table, checkpoint_interval: int, checkpoint_v2_threshold: int
+):
+    """One :func:`export_delta_log` attempt: refresh, diff, claim. The
+    exported version, or a :class:`.commit.Retry` on a lost claim."""
     root = table.root
     table._refresh()
     current = set(table._live)
@@ -1207,12 +1224,7 @@ def export_delta_log(
                 "delta.enableChangeDataFeed", ""
             )
         ).lower() == "true"
-        actions = [
-            _ict_commit_info(log_dir, version)
-            if ict_on
-            else {"commitInfo": {"operation": "WRITE",
-                                 "engineInfo": "snapshot-export"}}
-        ]
+        actions = [_commit_info(log_dir, version, "WRITE", ict_on)]
         if _meta.get("schemaString") != schema_string:
             actions.append(
                 _export_meta(schema_string, ict=ict_on, cdf=cdf_on)
@@ -1265,23 +1277,11 @@ def export_delta_log(
             }
         )
     if not _publish_commit(log_dir, version, actions):
-        # a FOREIGN writer claimed this version (exported logs are real
-        # Delta tables — other engines may commit to them): rebase by
-        # re-running the whole export, which re-replays the log
-        # INCLUDING the foreign commit and re-diffs against the current
-        # snapshot — an export is always a diff-to-current, so it
-        # rebases cleanly over any foreign action (Delta's optimistic
-        # concurrency loop). Bounded so a livelock surfaces honestly.
-        if _retries <= 0:
-            raise DeltaProtocolError(
-                f"export_delta_log lost the commit race at version "
-                f"{version} ten times in a row; a foreign writer is "
-                "committing faster than the export can rebase"
-            )
-        return export_delta_log(
-            table, checkpoint_interval, checkpoint_v2_threshold,
-            _retries=_retries - 1,
-        )
+        return Retry(DeltaProtocolError(
+            f"export_delta_log lost the commit race at version "
+            f"{version} ten times in a row; a foreign writer is "
+            "committing faster than the export can rebase"
+        ))
     if checkpoint_interval and version > 0 and version % checkpoint_interval == 0:
         # carry the log's DECLARED protocol and live domainMetadata
         # (harvested in the diff replay above — export commits never
@@ -1350,16 +1350,15 @@ def _ddl_commit(
     log_dir: str, last: int, new_meta: dict, operation: str,
     ict_on: bool,
 ) -> int:
-    """Shared metadata-only DDL commit loop (rename/drop/add): CAS at
-    the next version, rebasing over foreign DATA commits but refusing
-    a raced METADATA change."""
+    """Shared metadata-only DDL commit (rename/drop/add): claim the
+    next version, rebasing over foreign DATA commits but refusing a
+    raced METADATA change."""
     version = last + 1
-    for _attempt in range(10):
+
+    def attempt():
+        nonlocal version
         actions = [
-            _ict_commit_info(log_dir, version, operation=operation)
-            if ict_on
-            else {"commitInfo": {"operation": operation,
-                                 "engineInfo": "snapshot-export"}},
+            _commit_info(log_dir, version, operation, ict_on),
             {"metaData": new_meta},
         ]
         if _publish_commit(log_dir, version, actions):
@@ -1371,9 +1370,11 @@ def _ddl_commit(
                 "new schema"
             )
         version += 1
-    raise DeltaProtocolError(
-        f"{operation} lost the commit race ten times in a row"
-    )
+        return Retry(DeltaProtocolError(
+            f"{operation} lost the commit race ten times in a row"
+        ))
+
+    return optimistic_commit(attempt)
 
 
 def _max_column_id(conf: dict, fields: list) -> int:
@@ -1559,12 +1560,11 @@ def widen_delta_column(root: str, column: str, to_type: str) -> int:
         conf.get("delta.enableInCommitTimestamps", "")
     ).lower() == "true"
     version = last + 1
-    for _attempt in range(10):
+
+    def attempt():
+        nonlocal version
         actions = [
-            _ict_commit_info(log_dir, version, operation="CHANGE COLUMN")
-            if ict_on
-            else {"commitInfo": {"operation": "CHANGE COLUMN",
-                                 "engineInfo": "snapshot-export"}},
+            _commit_info(log_dir, version, "CHANGE COLUMN", ict_on),
             *actions_proto,
             {"metaData": new_meta},
         ]
@@ -1576,9 +1576,11 @@ def widen_delta_column(root: str, column: str, to_type: str) -> int:
                 "concurrent METADATA change; re-run against the new schema"
             )
         version += 1
-    raise DeltaProtocolError(
-        "widen_delta_column lost the commit race ten times in a row"
-    )
+        return Retry(DeltaProtocolError(
+            "widen_delta_column lost the commit race ten times in a row"
+        ))
+
+    return optimistic_commit(attempt)
 
 
 def clone_delta(src_root: str, dst_root: str) -> int:

@@ -49,12 +49,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .commit import Retry, optimistic_commit
 from .delta import (
     DELTA_LOG_DIR,
     DeltaProtocolError,
     _commit_actions,
+    _commit_info,
     _declared_protocol,
-    _ict_commit_info,
     _publish_commit,
     _replay_log,
     read_delta,
@@ -216,12 +217,11 @@ def _commit_with_cas(
     two instances of one streaming query both pass the dedup pre-check,
     and without this the loser would double-append the batch."""
     version = start_version
-    for _attempt in range(10):
+
+    def attempt():
+        nonlocal version
         actions = [
-            _ict_commit_info(log_dir, version, operation=operation)
-            if ict_on
-            else {"commitInfo": {"operation": operation,
-                                 "engineInfo": "snapshot-export"}},
+            _commit_info(log_dir, version, operation, ict_on),
             *build_actions(version),
         ]
         if _publish_commit(log_dir, version, actions):
@@ -245,10 +245,12 @@ def _commit_with_cas(
                 "changing table metadata; re-run against the new state"
             )
         version += 1
-    raise DeltaProtocolError(
-        f"lost the commit race ten times in a row starting at version "
-        f"{start_version}"
-    )
+        return Retry(DeltaProtocolError(
+            f"lost the commit race ten times in a row starting at "
+            f"version {start_version}"
+        ))
+
+    return optimistic_commit(attempt)
 
 
 def set_delta_check_constraint(
@@ -450,19 +452,6 @@ def _file_stats(path: str) -> str:
         "maxValues": maxs,
         "nullCount": nulls,
     })
-
-
-def _last_txn_version(log_dir: str, app_id: str) -> int | None:
-    """The newest ``txn`` action version recorded for ``app_id`` — the
-    spec's ``setTransaction`` streaming-sink dedup: a replayed
-    micro-batch whose (appId, version) is already recorded must SKIP,
-    or a sink retry after a commit-then-crash would double-append.
-    Resolved through the full log REPLAY (checkpoint + commits):
-    checkpoints carry txn actions per spec, so log truncation never
-    collapses the dedup window."""
-    txns: dict[str, int] = {}
-    _replay_log(os.path.dirname(log_dir), txns_out=txns)
-    return txns.get(app_id)
 
 
 def append_delta(

@@ -82,13 +82,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .commit import Retry, optimistic_commit
 from .delta import (
     DELTA_LOG_DIR,
     DeltaProtocolError,
     _commit_actions,
+    _commit_info,
     _declared_protocol,
     _dv_positions_df,
-    _ict_commit_info,
     _mapping_info,
     _now_ms,
     _publish_commit,
@@ -601,26 +602,21 @@ def _commit_file_level_cas(
     commit itself changes metadata/protocol) raises. On raise, every
     path in ``cleanup_rels`` (our staged DV / cdc / data files —
     referenced by nothing) is removed."""
-
-    def _fail(msg: str):
-        for rel in cleanup_rels:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(os.path.join(root, rel))
-        raise DeltaProtocolError(msg)
-
     version = start_version
-    for _attempt in range(10):
+
+    def attempt():
+        nonlocal version
         if _publish_commit(log_dir, version, build_actions(version)):
             return version
         raced = _commit_actions(log_dir, version)
         if any("metaData" in a or "protocol" in a for a in raced):
-            _fail(
+            raise DeltaProtocolError(
                 f"lost the commit race at version {version} to a "
                 "concurrent metaData/protocol change; re-validate "
                 "against the new rules and re-run"
             )
         if exclusive:
-            _fail(
+            raise DeltaProtocolError(
                 f"lost the commit race at version {version} while "
                 "upgrading the table protocol/metadata for deletion "
                 "vectors; re-run against the new state"
@@ -633,17 +629,24 @@ def _commit_file_level_cas(
                 raced_paths.add(unquote(a["remove"]["path"]))
         overlap = sorted(raced_paths & our_paths)
         if overlap:
-            _fail(
+            raise DeltaProtocolError(
                 f"concurrent commit {version} modified file(s) "
                 f"{overlap[:3]} this DML also rewrites; re-run against "
                 "the new snapshot"
             )
         version += 1
-    _fail(
-        f"lost the commit race ten times in a row starting at version "
-        f"{start_version}"
-    )
-    raise AssertionError("unreachable")
+        return Retry(DeltaProtocolError(
+            f"lost the commit race ten times in a row starting at "
+            f"version {start_version}"
+        ))
+
+    try:
+        return optimistic_commit(attempt)
+    except DeltaProtocolError:
+        for rel in cleanup_rels:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(root, rel))
+        raise
 
 
 def _rt_enforced(proto: dict, conf: dict) -> bool:
@@ -748,10 +751,7 @@ def _commit_row_delta(
 
     def build(v: int) -> list[dict]:
         return [
-            _ict_commit_info(base.log_dir, v, operation=operation)
-            if ict_on
-            else {"commitInfo": {"operation": operation,
-                                 "engineInfo": "snapshot-export"}},
+            _commit_info(base.log_dir, v, operation, ict_on),
             *proto_actions,
             *([{"metaData": meta_action}] if meta_action else []),
             *cdc_actions,

@@ -56,9 +56,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .commit import Retry, optimistic_commit
 from .delta import (
     DELTA_LOG_DIR,
     DeltaProtocolError,
+    _commit_info,
     _declared_protocol,
     _dv_positions_df,
     _ict_commit_info,
@@ -488,12 +490,7 @@ def optimize_delta(
     }
 
     def _build_actions(v: int) -> list[dict]:
-        acts = [
-            _ict_commit_info(log_dir, v, operation="OPTIMIZE")
-            if ict_on
-            else {"commitInfo": {"operation": "OPTIMIZE",
-                                 "engineInfo": "snapshot-export"}}
-        ]
+        acts = [_commit_info(log_dir, v, "OPTIMIZE", ict_on)]
         if add_mat_conf:
             new_meta = dict(meta)
             new_conf = dict(conf)
@@ -533,9 +530,10 @@ def optimize_delta(
         acts.extend(adds)
         return acts
 
-    for _attempt in range(10):
+    def attempt():
+        nonlocal version
         if _publish_commit(log_dir, version, _build_actions(version)):
-            break
+            return version
         # a FOREIGN writer claimed the version. Delta's conflict rules
         # for a re-layout: it COMMUTES with blind appends (disjoint
         # files) and rebase is just re-committing at the next version;
@@ -592,11 +590,12 @@ def optimize_delta(
                         fbase = max(fbase, int(wm) + 1)
             rt_state["base"] = fbase
         version += 1
-    else:
-        raise DeltaProtocolError(
+        return Retry(DeltaProtocolError(
             "optimize_delta lost the commit race ten times in a row; "
             "a foreign writer is committing faster than the rebase"
-        )
+        ))
+
+    version = optimistic_commit(attempt)
     if checkpoint_interval and version % checkpoint_interval == 0:
         _write_optimize_checkpoint(
             root, log_dir, version, v2_threshold=checkpoint_v2_threshold
@@ -623,13 +622,16 @@ def vacuum_delta(
     Time travel to versions that referenced a vacuumed file
     subsequently fails at scan time — the spec's own
     retention/time-travel trade, which is why the horizon defaults to
-    a week. UNTRACKED files are deliberately NOT collected (unlike the
-    reference implementation): this reader's tables are often
-    ZERO-COPY exports whose roots hold the host SnapshotTable's other
-    files — and on such a root (a ``_log`` commit log next to the
-    ``_delta_log``) vacuum REFUSES outright, because removed exported
-    files are usually still referenced by the host's own history; use
-    ``SnapshotTable.vacuum`` there instead.
+    a week. UNTRACKED parquet files — staged by a writer that died
+    before its commit claim, so no replayable action names them — are
+    crash debris and collect by file modification time against the
+    same horizon (the reference implementation's untracked-file rule;
+    hidden stage dirs and the log are skipped). This reader's tables
+    are often ZERO-COPY exports whose roots hold the host
+    SnapshotTable's other files — and on such a root (a ``_log``
+    commit log next to the ``_delta_log``) vacuum REFUSES outright,
+    because removed exported files are usually still referenced by the
+    host's own history; use ``SnapshotTable.vacuum`` there instead.
 
     Returns the deleted (or with ``dry_run`` the would-be-deleted)
     relative paths. Driver-side log replay only — no Spark job.
@@ -657,13 +659,21 @@ def vacuum_delta(
     #: its referencing data files are — a sharer still inside the
     #: retention window keeps the container alive for time travel
     dv_refs: dict[str, set[str]] = {}
+    #: change-data and DV files the log names — never crash debris
+    named: set[str] = set()
 
     def _dv_path(desc: dict) -> str | None:
         st = desc.get("storageType")
         p = desc.get("pathOrInlineDv")
         if st == "p":
+            named.add(p)
             return p if os.path.isabs(p) else os.path.join(root, p)
-        return None  # inline ('i') has no file; 'u' derives (kept out)
+        if st == "u":  # uuid-derived: named, but kept out of the GC below
+            from .dv import z85_decode
+
+            u = uuid.UUID(bytes=z85_decode(p[-20:]))
+            named.add(os.path.join(p[:-20], f"deletion_vector_{u}.bin"))
+        return None  # inline ('i') has no file
 
     for _v, cpath in _delta_commits(log_dir):
         with open(cpath) as f:
@@ -691,6 +701,10 @@ def vacuum_delta(
                     dvp = _dv_path(dv) if dv else None
                     if dvp:
                         dv_refs.setdefault(dvp, set()).add(p)
+                elif "cdc" in a:
+                    from urllib.parse import unquote
+
+                    named.add(unquote(a["cdc"]["path"]))
     # DVs referenced by the LIVE head stay, whatever history says
     meta, live, dvs, _last_v = _replay_log(root)
     head_dvs = {
@@ -725,6 +739,22 @@ def vacuum_delta(
         collectable.add(p)
         if on_disk:
             doomed.append(p)
+    # crash debris: data / DV files no replayable action names
+    named = {
+        os.path.abspath(os.path.join(root, p)) for p in (*named, *last, *live)
+    }
+    debris = []
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if d != DELTA_LOG_DIR and d[0] != "."]
+        for name in files:
+            p = os.path.abspath(os.path.join(dirpath, name))
+            if (
+                name.endswith(".parquet") or name.startswith("deletion_vector_")
+            ) and name[0] != "." and p not in named and (
+                os.path.getmtime(p) * 1000 <= horizon
+            ):
+                debris.append(os.path.relpath(p, root))
+    doomed.extend(sorted(debris))
     doomed_set = set(doomed)
     dv_doomed = {
         dvp
@@ -918,12 +948,10 @@ def set_delta_clustering_columns(
     ).lower() == "true"
     from .delta import _publish_commit
 
-    for _attempt in range(10):
+    def attempt():
+        nonlocal version
         actions = [
-            _ict_commit_info(log_dir, version, operation="CLUSTER BY")
-            if ict_on
-            else {"commitInfo": {"operation": "CLUSTER BY",
-                                 "engineInfo": "snapshot-export"}},
+            _commit_info(log_dir, version, "CLUSTER BY", ict_on),
             {
                 "domainMetadata": {
                     "domain": "delta.clustering",
@@ -939,10 +967,12 @@ def set_delta_clustering_columns(
         if _publish_commit(log_dir, version, actions):
             return version
         version += 1
-    raise DeltaProtocolError(
-        "set_delta_clustering_columns lost the commit race ten times "
-        "in a row; a foreign writer is committing continuously"
-    )
+        return Retry(DeltaProtocolError(
+            "set_delta_clustering_columns lost the commit race ten "
+            "times in a row; a foreign writer is committing continuously"
+        ))
+
+    return optimistic_commit(attempt)
 
 
 def _write_optimize_checkpoint(

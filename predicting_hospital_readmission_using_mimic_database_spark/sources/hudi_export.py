@@ -50,6 +50,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from ..session import small_plan_session, small_plan_spark
+from .commit import claim
 from .hudi import HOODIE_DIR
 
 
@@ -133,41 +134,25 @@ def _write_token() -> str:
 
 
 def _publish_instant(hdir: str, name: str, body: dict) -> None:
-    """ATOMICALLY claim a timeline instant file (put-if-absent via hard
-    link). Hudi's multi-writer story is a LOCK PROVIDER — without one,
-    two writers allocating the same instant is a detected error, not a
-    retry: the loser's data files already embed the instant in their
-    names and ``_hoodie_commit_time`` stamps, so rebasing would mean
-    rewriting them. Raises ``HudiProtocolError`` on the collision (the
-    orphaned files are never visible — no marker means no commit — and
-    a later clean can collect them)."""
-    import contextlib
-    import uuid as _uuid
-
+    """Claim a timeline instant file put-if-absent through the shared
+    commit seam (:func:`.commit.claim`, ``sources/commit.py``). Hudi's
+    multi-writer story is a LOCK PROVIDER — without one, two writers
+    allocating the same instant is a detected error, not a retry: the
+    loser's data files already embed the instant in their names and
+    ``_hoodie_commit_time`` stamps, so rebasing would mean rewriting
+    them. Raises ``HudiProtocolError`` on the collision (the orphaned
+    files are never visible — no marker means no commit — and a later
+    clean can collect them)."""
     from .hudi import HudiProtocolError
 
-    # Per-invocation unique temp name: a FIXED tmp path would let two
-    # writers racing on the same instant clobber each other's staged
-    # bytes before the os.link decides the race (the loser could then
-    # publish the winner's body, or hit FileNotFoundError instead of
-    # the intended HudiProtocolError).
-    tmp = os.path.join(hdir, f".{name}.{_uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(body, f)
-    final = os.path.join(hdir, name)
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
+    if not claim(os.path.join(hdir, name), lambda f: json.dump(body, f)):
         raise HudiProtocolError(
             f"concurrent Hudi writer detected: timeline instant "
             f"{name} already exists — Hudi multi-writer needs a lock "
             "provider; this writer's files for the instant stay "
             "invisible (no completed marker) and re-running re-exports "
             "at a fresh instant"
-        ) from None
-    finally:
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(tmp)
+        )
 
 
 def export_hudi(

@@ -74,6 +74,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .avro_ocf import read_avro
+from .commit import Retry, claim, optimistic_commit
 
 
 class IcebergProtocolError(NotImplementedError):
@@ -284,6 +285,16 @@ def _latest_metadata_path(root: str) -> str | None:
             if best is None or seq > best[0]:
                 best = (seq, os.path.join(mdir, name))
     return best[1] if best else None
+
+
+def _next_metadata_version(latest: str, meta: dict) -> int:
+    """The metadata version a committer claims next: past BOTH the
+    recorded export version and the ``latest`` metadata FILE's number
+    (a foreign commit's metadata carries no ``_export_version``; basing
+    the claim below its number would collide forever)."""
+    m = re.match(r"^v?(\d+)\.metadata\.json$", os.path.basename(latest))
+    recorded = meta.get("_export_version", len(meta.get("snapshots", [])))
+    return max(int(recorded), int(m.group(1)) if m else 0) + 1
 
 
 def _localize(uri: str, root: str) -> str:
@@ -615,8 +626,7 @@ def _iceberg_type_ids(dt: T.DataType, next_id: list[int]):
 
 
 def export_iceberg(
-    table, _retries: int = 10, branch: str | None = None,
-    wap_id: str | None = None,
+    table, branch: str | None = None, wap_id: str | None = None,
 ) -> int:
     """Publish a :class:`~.table.SnapshotTable`'s CURRENT snapshot as a
     real Iceberg v2 table under the table root — zero data movement
@@ -667,7 +677,22 @@ def export_iceberg(
     expirable, exactly real Iceberg's behavior; a NO-CHANGE wap stage
     returns the base with nothing to publish (use the branch flavor
     for no-op-tolerant pipelines). Mutually exclusive with
-    ``branch``."""
+    ``branch``.
+
+    A FOREIGN writer claiming the metadata version first makes the
+    export refresh and re-attempt (the format's rule), bounded by the
+    commit seam (``sources/commit.py``)."""
+    if branch is not None and wap_id is not None:
+        raise ValueError("branch and wap_id are mutually exclusive")
+    return optimistic_commit(
+        lambda: _export_iceberg_attempt(table, branch, wap_id)
+    )
+
+
+def _export_iceberg_attempt(table, branch: str | None, wap_id: str | None):
+    """One :func:`export_iceberg` attempt: refresh, diff, write this
+    attempt's manifests, claim ``vN.metadata.json``. The snapshot id,
+    or a :class:`.commit.Retry` after a lost claim."""
     import time
     import uuid as _uuid
 
@@ -679,8 +704,6 @@ def export_iceberg(
     # manifest files — only the metadata CAS decides the winner, and
     # the loser's files are unreferenced orphans
     attempt = _uuid.uuid4().hex[:12]
-    if branch is not None and wap_id is not None:
-        raise ValueError("branch and wap_id are mutually exclusive")
     root = table.root
     table._refresh()
     live = sorted(table._live.items())
@@ -746,15 +769,7 @@ def export_iceberg(
                                 type="branch")
             return base_sid
         sid = last_id + 1
-        # next version: past BOTH the recorded export version and the
-        # latest metadata FILE's number (a foreign commit's metadata
-        # carries no _export_version; basing the CAS below its number
-        # would collide forever)
-        m = re.match(r"^v?(\d+)\.metadata\.json$", os.path.basename(latest))
-        file_v = int(m.group(1)) if m else 0
-        version = max(
-            int(prev_meta.get("_export_version", len(snapshots))), file_v
-        ) + 1
+        version = _next_metadata_version(latest, prev_meta)
         for mi, (mrec, live_entries) in enumerate(per_manifest):
             if live_entries is None:
                 carried.append(dict(mrec))  # delete manifest: as-is
@@ -930,38 +945,30 @@ def export_iceberg(
         refs = dict(meta.get("refs") or {})
         refs[branch] = {"snapshot-id": sid, "type": "branch"}
         meta["refs"] = refs
-    try:
-        # Iceberg's commit IS a compare-and-swap on the metadata
-        # pointer: claiming vN.metadata.json must be put-if-absent, or
-        # a concurrent committer's snapshot would be silently clobbered
-        with open(
-            os.path.join(mdir, f"v{version}.metadata.json"), "x"
-        ) as f:
-            json.dump(meta, f)
-    except FileExistsError:
-        # a FOREIGN writer took this version: the format's rule is
-        # refresh-and-reattempt — re-run the export, which re-reads the
-        # current metadata (now including the foreign snapshot) and
-        # re-diffs against the table's live set. Bounded so a livelock
-        # surfaces honestly. This attempt's manifest/manifest-list
-        # files (all named ``*-{attempt}.avro``) are unreferenced by
-        # any committed metadata — delete them now; orphan GC only
-        # scans data/, so leaving them would leak one avro set per
-        # lost CAS forever.
+    # Iceberg's commit IS a compare-and-swap on the metadata pointer:
+    # claiming vN.metadata.json must be put-if-absent, or a concurrent
+    # committer's snapshot would be silently clobbered
+    if not claim(
+        os.path.join(mdir, f"v{version}.metadata.json"),
+        lambda f: json.dump(meta, f),
+    ):
+        # a FOREIGN writer took this version: the next attempt re-reads
+        # the current metadata (now including the foreign snapshot) and
+        # re-diffs against the table's live set. This attempt's
+        # manifest/manifest-list files (all named ``*-{attempt}.avro``)
+        # are unreferenced by any committed metadata — delete them now;
+        # orphan GC only scans data/, so leaving them would leak one
+        # avro set per lost CAS forever.
         import glob as _glob
 
         for stale in _glob.glob(os.path.join(mdir, f"*-{attempt}.avro")):
             with contextlib.suppress(FileNotFoundError):
                 os.remove(stale)
-        if _retries <= 0:
-            raise IcebergProtocolError(
-                f"export_iceberg lost the metadata CAS at version "
-                f"{version} ten times in a row; a foreign writer is "
-                "committing faster than the export can refresh"
-            ) from None
-        return export_iceberg(
-            table, _retries=_retries - 1, branch=branch, wap_id=wap_id
-        )
+        return Retry(IcebergProtocolError(
+            f"export_iceberg lost the metadata CAS at version "
+            f"{version} ten times in a row; a foreign writer is "
+            "committing faster than the export can refresh"
+        ))
     _advance_version_hint(mdir, version)
     return sid
 
@@ -4155,7 +4162,7 @@ def drop_iceberg_ref(root: str, name: str) -> None:
 
 def publish_iceberg_wap(
     root: str, branch: str | None = None, retain_branch: bool = False,
-    _retries: int = 10, wap_id: str | None = None,
+    wap_id: str | None = None,
 ) -> dict:
     """PUBLISH a staged audit branch to main — the publish half of
     WRITE-AUDIT-PUBLISH (``export_iceberg(branch=)`` stages, the audit
@@ -4192,19 +4199,32 @@ def publish_iceberg_wap(
     branch is dropped (its job is done) unless ``retain_branch``.
 
     The commit is the same metadata CAS every writer uses
-    (put-if-absent on ``vN.metadata.json``, refresh-and-retry on loss).
+    (put-if-absent on ``vN.metadata.json``, refresh-and-retry on loss,
+    through the commit seam in ``sources/commit.py``).
     Metadata-only: at 100 TB a publish moves a pointer and (cherry-pick)
     writes one manifest-list avro; no data I/O. Returns
     ``{"snapshot_id", "mode"}``."""
+    if (branch is None) == (wap_id is None):
+        raise ValueError(
+            "publish_iceberg_wap needs exactly one of branch / wap_id"
+        )
+    return optimistic_commit(
+        lambda: _publish_wap_attempt(root, branch, retain_branch, wap_id)
+    )
+
+
+def _publish_wap_attempt(
+    root: str, branch: str | None, retain_branch: bool,
+    wap_id: str | None,
+):
+    """One :func:`publish_iceberg_wap` attempt against the refreshed
+    metadata: the result dict, or a :class:`.commit.Retry` after a
+    lost claim."""
     import time
     import uuid as _uuid
 
     from .avro_ocf import read_avro as _read, write_avro as _write
 
-    if (branch is None) == (wap_id is None):
-        raise ValueError(
-            "publish_iceberg_wap needs exactly one of branch / wap_id"
-        )
     mdir = os.path.join(root, "metadata")
     latest = _latest_metadata_path(root)
     if latest is None:
@@ -4360,29 +4380,18 @@ def publish_iceberg_wap(
     if "main" in refs and refs["main"].get("type") == "branch":
         refs["main"] = {"snapshot-id": new_sid, "type": "branch"}
     new_meta["refs"] = refs
-    m = re.match(r"^v?(\d+)\.metadata\.json$", os.path.basename(latest))
-    file_v = int(m.group(1)) if m else 0
-    version = max(
-        int(meta.get("_export_version", len(snaps))), file_v
-    ) + 1
+    version = _next_metadata_version(latest, meta)
     new_meta["_export_version"] = version
-    try:
-        with open(
-            os.path.join(mdir, f"v{version}.metadata.json"), "x"
-        ) as f:
-            json.dump(new_meta, f)
-    except FileExistsError:
+    if not claim(
+        os.path.join(mdir, f"v{version}.metadata.json"),
+        lambda f: json.dump(new_meta, f),
+    ):
         if new_snap is not None:
             with contextlib.suppress(FileNotFoundError):
                 os.remove(new_snap["manifest-list"])
-        if _retries <= 0:
-            raise IcebergProtocolError(
-                f"publish_iceberg_wap lost the metadata CAS at version "
-                f"{version} ten times in a row"
-            ) from None
-        return publish_iceberg_wap(
-            root, branch, retain_branch=retain_branch,
-            _retries=_retries - 1, wap_id=wap_id,
-        )
+        return Retry(IcebergProtocolError(
+            f"publish_iceberg_wap lost the metadata CAS at version "
+            f"{version} ten times in a row"
+        ))
     _advance_version_hint(mdir, version)
     return {"snapshot_id": new_sid, "mode": mode}

@@ -32,7 +32,8 @@ Scale shape:
   can never strike the same snapshot's fresh appends (pinned in
   tests/test_iceberg_dml.py);
 * the commit is the format's compare-and-swap on
-  ``vN.metadata.json``; a lost CAS deletes this attempt's files
+  ``vN.metadata.json``, claimed through the commit seam
+  (``sources/commit.py``); a lost CAS deletes this attempt's files
   (all ``*-{attempt}*`` named) and re-runs the op against the
   refreshed metadata, bounded like ``export_iceberg``.
 """
@@ -47,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import small_plan_session, small_plan_spark
+from .commit import Retry, claim, optimistic_commit
 
 
 def _table_bytes_est(meta, root, sid) -> int:
@@ -73,6 +75,7 @@ from .iceberg import (  # noqa: E402
     _latest_metadata_path,
     _live_files,
     _localize,
+    _next_metadata_version,
     _schema_json,
     _table_schema,
     encode_bound,
@@ -307,19 +310,7 @@ def _stage_and_commit(
         write_avro(mlist, MANIFEST_FILE_SCHEMA, mf_records)
         written.append(mlist)
 
-        # next version: past BOTH the recorded export version and the
-        # latest metadata FILE's number (a foreign commit's metadata
-        # carries no _export_version; basing the CAS below its number
-        # would collide forever — the export_iceberg guard)
-        import re as _re
-
-        m = _re.match(
-            r"^v?(\d+)\.metadata\.json$", os.path.basename(latest)
-        )
-        file_v = int(m.group(1)) if m else 0
-        version = max(
-            int(meta.get("_export_version", len(snaps))), file_v
-        ) + 1
+        version = _next_metadata_version(latest, meta)
         new_meta = dict(meta)
         new_meta["snapshots"] = snaps + [{
             "snapshot-id": sid,
@@ -333,14 +324,12 @@ def _stage_and_commit(
         new_meta["last-sequence-number"] = sid
         new_meta["last-updated-ms"] = int(time.time() * 1000)
         new_meta["_export_version"] = version
-        try:
-            # the format's commit: compare-and-swap on the metadata
-            # pointer (put-if-absent claim of the next version)
-            with open(
-                os.path.join(mdir, f"v{version}.metadata.json"), "x"
-            ) as f:
-                json.dump(new_meta, f)
-        except FileExistsError:
+        # the format's commit: compare-and-swap on the metadata
+        # pointer (put-if-absent claim of the next version)
+        if not claim(
+            os.path.join(mdir, f"v{version}.metadata.json"),
+            lambda f: json.dump(new_meta, f),
+        ):
             _cleanup()
             return None
         _advance_version_hint(mdir, version)
@@ -355,7 +344,6 @@ def merge_iceberg(
     when_matched: str = "update", insert: bool = True,
     broadcast_source_rows: int = 1_000_000,
     broadcast_bytes: int = 128 * 1024 * 1024,
-    _retries: int = 10,
 ) -> dict:
     """``MERGE INTO <iceberg table at root> t USING <source> s ON
     <equi-keys>`` as one row-delta snapshot (module docstring).
@@ -382,172 +370,166 @@ def merge_iceberg(
             f"when_matched must be 'update' or 'delete', "
             f"got {when_matched!r}"
         )
-    latest, meta, snaps, cur_sid = _load_v2_table(root, "merge_iceberg")
 
-    schema = _table_schema(meta)
-    table_cols = [f.name for f in schema.fields]
-    bad_on = [c for c in on if c not in table_cols]
-    if not on or bad_on:
-        raise ValueError(
-            f"merge keys {on} must be non-empty table columns "
-            f"(schema: {table_cols})"
-        )
-    extra = [c for c in source.columns if c not in table_cols]
-    missing = [c for c in table_cols if c not in source.columns]
-    if extra or missing:
-        raise IcebergProtocolError(
-            f"source must carry exactly the table's columns; "
-            f"extra={extra} missing={missing}"
-        )
-    src = source.select([
-        F.col(f.name).cast(f.dataType).alias(f.name)
-        for f in schema.fields
-    ])
-    # duplicate-key gate in ONE aggregate (count vs distinct null-safe
-    # key structs) whose row count also drives the join strategy below
-    row = src.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct(F.struct(*[F.col(c) for c in on])).alias("nd"),
-    ).collect()[0]
-    if int(row["nd"]) != int(row["n"]):
-        raise IcebergProtocolError(
-            f"source has duplicate key tuples under {on}; MERGE "
-            "requires at most one source row per target row"
-        )
-    n_src = int(row["n"])
+    def attempt():
+        latest, meta, snaps, cur_sid = _load_v2_table(root, "merge_iceberg")
 
-    fpk, posk = "__ice_dml_file", "__ice_dml_pos"
-    # byte-gate the rest of the merge (merge_delta's rule): inputs are
-    # the snapshot's live files plus the source delta, both bounded
-    # driver-side; `spark` and `src` are re-bound to the AQE-off
-    # pinned clone when small, unchanged otherwise (spark0 keeps the
-    # caller's session for the CAS-retry recursion)
-    from .io import BROADCAST_INFLATION
-    from .io import schema_row_bytes as _srb
-
-    # ONE manifest resolution serves the session gate here AND the
-    # broadcast gates below (tot_bytes/tot_rows). A file without a
-    # record_count makes the ROW total unknown but must never truncate
-    # the BYTE total (est_broadcast_bytes' unknown-rows fallback bounds
-    # by the whole table's inflated bytes).
-    tot_bytes = tot_rows = 0
-    data_files, _p, _e, _d = _live_files(meta, root, cur_sid)
-    for _path, _pv, _seq, st, _sid, _frid in data_files:
-        tot_bytes += int(st.get("file_size_in_bytes") or 0)
-        nr = st.get("record_count")
-        if nr is None or tot_rows < 0:
-            tot_rows = -1  # any file without a count: row total unknown
-        else:
-            tot_rows += int(nr)
-    tot_rows = max(tot_rows, 0)
-
-    spark0 = spark
-    ctx = small_plan_session(
-        src,
-        est_bytes=BROADCAST_INFLATION * tot_bytes + n_src * _srb(schema),
-    )
-    spark, (src,) = ctx.__enter__()
-    try:
-        tgt = read_iceberg(
-            spark, root, snapshot_id=cur_sid, _keep_keys=(fpk, posk)
-        )
-        s = src.alias("s")
-        t = tgt.alias("t")
-        cond = F.lit(True)
-        for k in on:
-            cond = cond & F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}"))
-        # ONE source-sized join; every downstream frame projects from it.
-        # Delta-sized sources (the normal case) take the low-shuffle shape
-        # (optimization guide §3.2): a broadcast semi join on the source
-        # keys pre-filters the target scan to matched rows — the target is
-        # never shuffled — and the <=|source| survivors broadcast back for
-        # the left join; table-sized sources keep the shuffled fallback.
-        # Both broadcasts are gated on estimated BYTES as well as rows
-        # (guide §3.1): the manifests' record_count/file_size_in_bytes
-        # give the observed row width, so a wide table stops the
-        # broadcast-back even under the row cap (the semi pre-filter stays
-        # — keys are schema-width small).
-        from .io import est_broadcast_bytes, schema_row_bytes
-        from pyspark.sql.types import StructType as _ST
-
-        key_schema = _ST([f for f in schema.fields if f.name in on])
-        # tot_bytes/tot_rows computed once above, before the gate
-        can_semi = (
-            n_src <= broadcast_source_rows
-            and n_src * schema_row_bytes(key_schema) <= broadcast_bytes
-        )
-        can_back = can_semi and est_broadcast_bytes(
-            n_src, schema_row_bytes(schema), tot_bytes, tot_rows
-        ) <= broadcast_bytes
-        if can_semi:
-            keys = src.select(*on).alias("s")
-            t_hits = t.join(F.broadcast(keys), cond, "left_semi").alias("t")
-            rhs = F.broadcast(t_hits) if can_back else t_hits
-            j = s.join(rhs, cond, "left").persist()
-        else:
-            j = s.join(t, cond, "left").persist()
-        try:
-            matched = j.filter(F.col(fpk).isNotNull())
-            unmatched = j.filter(F.col(fpk).isNull())
-            s_cols = [F.col(f"s.{c}").alias(c) for c in table_cols]
-
-            new_rows = unmatched.select(*s_cols) if insert else None
-            if when_matched == "update":
-                upd = matched.select(*s_cols)
-                new_rows = (
-                    upd if new_rows is None else new_rows.unionByName(upd)
-                )
-
-            res = _stage_and_commit(
-                spark, root, latest, meta, snaps, cur_sid,
-                _uuid.uuid4().hex[:12],
-                matched.select(
-                    F.col(fpk).alias("file_path"),
-                    F.col(posk).alias("pos"),
-                ),
-                new_rows, "merge",
-                lambda n_m, n_n: {
-                    "operation": "overwrite",
-                    "merged-rows": str(n_m),
-                    "added-rows": str(n_n),
-                },
+        schema = _table_schema(meta)
+        table_cols = [f.name for f in schema.fields]
+        bad_on = [c for c in on if c not in table_cols]
+        if not on or bad_on:
+            raise ValueError(
+                f"merge keys {on} must be non-empty table columns "
+                f"(schema: {table_cols})"
             )
-        finally:
-            j.unpersist()
-    finally:
-        ctx.__exit__(None, None, None)
-    if res is None:
-        if _retries <= 0:
+        extra = [c for c in source.columns if c not in table_cols]
+        missing = [c for c in table_cols if c not in source.columns]
+        if extra or missing:
             raise IcebergProtocolError(
+                f"source must carry exactly the table's columns; "
+                f"extra={extra} missing={missing}"
+            )
+        src = source.select([
+            F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        ])
+        # duplicate-key gate in ONE aggregate (count vs distinct null-safe
+        # key structs) whose row count also drives the join strategy below
+        row = src.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(F.struct(*[F.col(c) for c in on])).alias("nd"),
+        ).collect()[0]
+        if int(row["nd"]) != int(row["n"]):
+            raise IcebergProtocolError(
+                f"source has duplicate key tuples under {on}; MERGE "
+                "requires at most one source row per target row"
+            )
+        n_src = int(row["n"])
+
+        fpk, posk = "__ice_dml_file", "__ice_dml_pos"
+        # byte-gate the rest of the merge (merge_delta's rule): inputs are
+        # the snapshot's live files plus the source delta, both bounded
+        # driver-side; `sess` and `src` are the AQE-off pinned clone
+        # when small, the caller's session and frame otherwise
+        from .io import BROADCAST_INFLATION
+        from .io import schema_row_bytes as _srb
+
+        # ONE manifest resolution serves the session gate here AND the
+        # broadcast gates below (tot_bytes/tot_rows). A file without a
+        # record_count makes the ROW total unknown but must never truncate
+        # the BYTE total (est_broadcast_bytes' unknown-rows fallback bounds
+        # by the whole table's inflated bytes).
+        tot_bytes = tot_rows = 0
+        data_files, _p, _e, _d = _live_files(meta, root, cur_sid)
+        for _path, _pv, _seq, st, _sid, _frid in data_files:
+            tot_bytes += int(st.get("file_size_in_bytes") or 0)
+            nr = st.get("record_count")
+            if nr is None or tot_rows < 0:
+                tot_rows = -1  # any file without a count: row total unknown
+            else:
+                tot_rows += int(nr)
+        tot_rows = max(tot_rows, 0)
+
+        ctx = small_plan_session(
+            src,
+            est_bytes=BROADCAST_INFLATION * tot_bytes + n_src * _srb(schema),
+        )
+        sess, (src,) = ctx.__enter__()
+        try:
+            tgt = read_iceberg(
+                sess, root, snapshot_id=cur_sid, _keep_keys=(fpk, posk)
+            )
+            s = src.alias("s")
+            t = tgt.alias("t")
+            cond = F.lit(True)
+            for k in on:
+                cond = cond & F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}"))
+            # ONE source-sized join; every downstream frame projects from it.
+            # Delta-sized sources (the normal case) take the low-shuffle shape
+            # (optimization guide §3.2): a broadcast semi join on the source
+            # keys pre-filters the target scan to matched rows — the target is
+            # never shuffled — and the <=|source| survivors broadcast back for
+            # the left join; table-sized sources keep the shuffled fallback.
+            # Both broadcasts are gated on estimated BYTES as well as rows
+            # (guide §3.1): the manifests' record_count/file_size_in_bytes
+            # give the observed row width, so a wide table stops the
+            # broadcast-back even under the row cap (the semi pre-filter stays
+            # — keys are schema-width small).
+            from .io import est_broadcast_bytes, schema_row_bytes
+            from pyspark.sql.types import StructType as _ST
+
+            key_schema = _ST([f for f in schema.fields if f.name in on])
+            # tot_bytes/tot_rows computed once above, before the gate
+            can_semi = (
+                n_src <= broadcast_source_rows
+                and n_src * schema_row_bytes(key_schema) <= broadcast_bytes
+            )
+            can_back = can_semi and est_broadcast_bytes(
+                n_src, schema_row_bytes(schema), tot_bytes, tot_rows
+            ) <= broadcast_bytes
+            if can_semi:
+                keys = src.select(*on).alias("s")
+                t_hits = t.join(F.broadcast(keys), cond, "left_semi").alias("t")
+                rhs = F.broadcast(t_hits) if can_back else t_hits
+                j = s.join(rhs, cond, "left").persist()
+            else:
+                j = s.join(t, cond, "left").persist()
+            try:
+                matched = j.filter(F.col(fpk).isNotNull())
+                unmatched = j.filter(F.col(fpk).isNull())
+                s_cols = [F.col(f"s.{c}").alias(c) for c in table_cols]
+
+                new_rows = unmatched.select(*s_cols) if insert else None
+                if when_matched == "update":
+                    upd = matched.select(*s_cols)
+                    new_rows = (
+                        upd if new_rows is None else new_rows.unionByName(upd)
+                    )
+
+                res = _stage_and_commit(
+                    sess, root, latest, meta, snaps, cur_sid,
+                    _uuid.uuid4().hex[:12],
+                    matched.select(
+                        F.col(fpk).alias("file_path"),
+                        F.col(posk).alias("pos"),
+                    ),
+                    new_rows, "merge",
+                    lambda n_m, n_n: {
+                        "operation": "overwrite",
+                        "merged-rows": str(n_m),
+                        "added-rows": str(n_n),
+                    },
+                )
+            finally:
+                j.unpersist()
+        finally:
+            ctx.__exit__(None, None, None)
+        if res is None:
+            # refresh-and-reattempt against the new current snapshot:
+            # the matched set may have changed, so the whole merge
+            # re-runs (the source frame is unchanged)
+            return Retry(IcebergProtocolError(
                 "merge_iceberg lost the metadata CAS ten times in a "
                 "row; a foreign writer is committing faster than the "
                 "merge can refresh"
-            )
-        # refresh-and-reattempt against the new current snapshot:
-        # the matched set may have changed, so the whole merge
-        # re-runs (the source frame is unchanged)
-        return merge_iceberg(
-            spark0, root, source, on,
-            when_matched=when_matched, insert=insert,
-            broadcast_source_rows=broadcast_source_rows,
-            broadcast_bytes=broadcast_bytes,
-            _retries=_retries - 1,
-        )
-    sid, n_matched, n_new = res
-    return {
-        "snapshot_id": sid,
-        "num_updated": n_matched if when_matched == "update" else 0,
-        "num_deleted": n_matched if when_matched == "delete" else 0,
-        "num_inserted": (
-            n_new - (n_matched if when_matched == "update" else 0)
-            if insert else 0
-        ),
-    }
+            ))
+        sid, n_matched, n_new = res
+        return {
+            "snapshot_id": sid,
+            "num_updated": n_matched if when_matched == "update" else 0,
+            "num_deleted": n_matched if when_matched == "delete" else 0,
+            "num_inserted": (
+                n_new - (n_matched if when_matched == "update" else 0)
+                if insert else 0
+            ),
+        }
+
+    return optimistic_commit(attempt)
 
 
 def update_iceberg(
     spark: SparkSession, root: str, predicate: str,
-    assignments: dict[str, str], _retries: int = 10,
+    assignments: dict[str, str],
 ) -> dict:
     """``UPDATE <iceberg table at root> SET <col = expr, ...> WHERE
     <predicate>`` as one row-delta snapshot: matched rows' (file,
@@ -562,72 +544,69 @@ def update_iceberg(
     as :func:`merge_iceberg`."""
     import uuid as _uuid
 
-    latest, meta, snaps, cur_sid = _load_v2_table(
-        root, "update_iceberg"
-    )
-    schema = _table_schema(meta)
-    table_cols = [f.name for f in schema.fields]
-    if not assignments:
-        raise ValueError("UPDATE needs at least one SET assignment")
-    bad = [c for c in assignments if c not in table_cols]
-    if bad:
-        raise ValueError(
-            f"SET columns {bad} not in the table schema "
-            f"(columns: {table_cols})"
+    def attempt():
+        latest, meta, snaps, cur_sid = _load_v2_table(
+            root, "update_iceberg"
         )
-    fpk, posk = "__ice_dml_file", "__ice_dml_pos"
-    # byte-gate the whole op (merge_iceberg's rule): every frame below
-    # is built from `spark` and consumed inside this op
-    spark = small_plan_spark(
-        spark, est_bytes=_table_bytes_est(meta, root, cur_sid)
-    )
-    tgt = read_iceberg(
-        spark, root, snapshot_id=cur_sid, _keep_keys=(fpk, posk)
-    )
-    # PERSISTED: the pos-delete write and the new-rows write both read
-    # this one evaluation — a nondeterministic predicate can never
-    # strike one row set and rewrite a different one, and the
-    # snapshot scans once, not per consumer (merge_iceberg's rule)
-    matched = tgt.filter(F.expr(predicate)).persist()
-    try:
-        # all SET expressions see the PRE-update row: one projection
-        new_rows = matched.select(*[
-            (F.expr(assignments[f.name]).cast(f.dataType)
-             if f.name in assignments else F.col(f.name)).alias(f.name)
-            for f in schema.fields
-        ])
-        res = _stage_and_commit(
-            spark, root, latest, meta, snaps, cur_sid,
-            _uuid.uuid4().hex[:12],
-            matched.select(
-                F.col(fpk).alias("file_path"), F.col(posk).alias("pos")
-            ),
-            new_rows, "update",
-            lambda n_m, _n_n: {
-                "operation": "overwrite",
-                "updated-rows": str(n_m),
-            },
+        schema = _table_schema(meta)
+        table_cols = [f.name for f in schema.fields]
+        if not assignments:
+            raise ValueError("UPDATE needs at least one SET assignment")
+        bad = [c for c in assignments if c not in table_cols]
+        if bad:
+            raise ValueError(
+                f"SET columns {bad} not in the table schema "
+                f"(columns: {table_cols})"
+            )
+        fpk, posk = "__ice_dml_file", "__ice_dml_pos"
+        # byte-gate the whole op (merge_iceberg's rule): every frame below
+        # is built from `sess` and consumed inside this op
+        sess = small_plan_spark(
+            spark, est_bytes=_table_bytes_est(meta, root, cur_sid)
         )
-    finally:
-        matched.unpersist()
-    if res is None:
-        if _retries <= 0:
-            raise IcebergProtocolError(
+        tgt = read_iceberg(
+            sess, root, snapshot_id=cur_sid, _keep_keys=(fpk, posk)
+        )
+        # PERSISTED: the pos-delete write and the new-rows write both read
+        # this one evaluation — a nondeterministic predicate can never
+        # strike one row set and rewrite a different one, and the
+        # snapshot scans once, not per consumer (merge_iceberg's rule)
+        matched = tgt.filter(F.expr(predicate)).persist()
+        try:
+            # all SET expressions see the PRE-update row: one projection
+            new_rows = matched.select(*[
+                (F.expr(assignments[f.name]).cast(f.dataType)
+                 if f.name in assignments else F.col(f.name)).alias(f.name)
+                for f in schema.fields
+            ])
+            res = _stage_and_commit(
+                sess, root, latest, meta, snaps, cur_sid,
+                _uuid.uuid4().hex[:12],
+                matched.select(
+                    F.col(fpk).alias("file_path"), F.col(posk).alias("pos")
+                ),
+                new_rows, "update",
+                lambda n_m, _n_n: {
+                    "operation": "overwrite",
+                    "updated-rows": str(n_m),
+                },
+            )
+        finally:
+            matched.unpersist()
+        if res is None:
+            return Retry(IcebergProtocolError(
                 "update_iceberg lost the metadata CAS ten times in a "
                 "row; a foreign writer is committing faster than the "
                 "update can refresh"
-            )
-        return update_iceberg(
-            spark, root, predicate, assignments,
-            _retries=_retries - 1,
-        )
-    sid, n_matched, _n_new = res
-    return {"snapshot_id": sid, "num_updated": n_matched}
+            ))
+        sid, n_matched, _n_new = res
+        return {"snapshot_id": sid, "num_updated": n_matched}
+
+    return optimistic_commit(attempt)
 
 
 def delete_from_iceberg(
     spark: SparkSession, root: str, predicate: str,
-    _retries: int = 10,
 ) -> dict:
     """``DELETE FROM <iceberg table at root> WHERE <predicate>`` as
     one row-delta snapshot: the doomed rows' (file, ordinal) pairs
@@ -645,37 +624,36 @@ def delete_from_iceberg(
     (lost races refresh and re-run, bounded)."""
     import uuid as _uuid
 
-    latest, meta, snaps, cur_sid = _load_v2_table(
-        root, "delete_from_iceberg"
-    )
-    fpk, posk = "__ice_dml_file", "__ice_dml_pos"
-    # byte-gate the whole op (merge_iceberg's rule)
-    spark = small_plan_spark(
-        spark, est_bytes=_table_bytes_est(meta, root, cur_sid)
-    )
-    tgt = read_iceberg(
-        spark, root, snapshot_id=cur_sid, _keep_keys=(fpk, posk)
-    )
-    matched = tgt.filter(F.expr(predicate)).select(
-        F.col(fpk).alias("file_path"), F.col(posk).alias("pos")
-    )
-    res = _stage_and_commit(
-        spark, root, latest, meta, snaps, cur_sid,
-        _uuid.uuid4().hex[:12], matched, None, "delete",
-        lambda n_m, _n_n: {
-            "operation": "delete",
-            "deleted-rows": str(n_m),
-        },
-    )
-    if res is None:
-        if _retries <= 0:
-            raise IcebergProtocolError(
+    def attempt():
+        latest, meta, snaps, cur_sid = _load_v2_table(
+            root, "delete_from_iceberg"
+        )
+        fpk, posk = "__ice_dml_file", "__ice_dml_pos"
+        # byte-gate the whole op (merge_iceberg's rule)
+        sess = small_plan_spark(
+            spark, est_bytes=_table_bytes_est(meta, root, cur_sid)
+        )
+        tgt = read_iceberg(
+            sess, root, snapshot_id=cur_sid, _keep_keys=(fpk, posk)
+        )
+        matched = tgt.filter(F.expr(predicate)).select(
+            F.col(fpk).alias("file_path"), F.col(posk).alias("pos")
+        )
+        res = _stage_and_commit(
+            sess, root, latest, meta, snaps, cur_sid,
+            _uuid.uuid4().hex[:12], matched, None, "delete",
+            lambda n_m, _n_n: {
+                "operation": "delete",
+                "deleted-rows": str(n_m),
+            },
+        )
+        if res is None:
+            return Retry(IcebergProtocolError(
                 "delete_from_iceberg lost the metadata CAS ten times "
                 "in a row; a foreign writer is committing faster than "
                 "the delete can refresh"
-            )
-        return delete_from_iceberg(
-            spark, root, predicate, _retries=_retries - 1
-        )
-    sid, n_matched, _n_new = res
-    return {"snapshot_id": sid, "num_deleted": n_matched}
+            ))
+        sid, n_matched, _n_new = res
+        return {"snapshot_id": sid, "num_deleted": n_matched}
+
+    return optimistic_commit(attempt)

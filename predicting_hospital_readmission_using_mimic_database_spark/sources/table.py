@@ -10,15 +10,15 @@ minimally and Spark-first):
   normal Spark jobs; the TABLE STATE is the set of live files, defined
   solely by an append-only JSON commit log under ``_log/``.
 * A commit is ONE atomically-created file ``_log/<version 20d>.json`` holding
-  ``add`` / ``remove`` file actions. Creation uses ``os.link`` (POSIX: fails
-  with EEXIST if the version was taken) — the same "put-if-absent" primitive
-  Delta uses on HDFS/ABFS; on S3 the identical protocol runs through a
-  conditional-put or a commit service. Readers never see partial state:
-  either the commit file exists (all its files are live) or it doesn't.
-* Optimistic concurrency: writers prepare data files, then race to create
-  version N. A loser re-reads the log and either REBASES (pure appends
-  commute with anything) or raises :class:`ConcurrentWriteError` (any op
-  that removed files it had read — merge/overwrite/delete/compact — is
+  ``add`` / ``remove`` file actions, claimed put-if-absent through the
+  commit seam every format shares (:func:`.commit.claim`, see
+  ``sources/commit.py``). Readers never see partial state: either the
+  commit file exists (all its files are live) or it doesn't.
+* Optimistic concurrency (:func:`.commit.optimistic_commit`): writers
+  prepare data files, then race to claim version N. A loser re-reads the
+  log and either REBASES (pure appends commute with anything; bounded by
+  the seam's attempt limit) or raises :class:`ConcurrentWriteError` (any
+  op that removed files it had read — merge/overwrite/delete/compact — is
   serialized per table, Delta's WriteSerializable level).
 * Copy-on-write MERGE with bucket pruning: a table created with
   ``bucket_key`` hash-partitions rows into ``num_buckets`` buckets
@@ -56,6 +56,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from .commit import COMMIT_ATTEMPTS, Retry, claim, optimistic_commit
 
 LOG_DIR = "_log"
 LAST_CHECKPOINT = "_last_checkpoint"
@@ -193,15 +195,8 @@ class SnapshotTable:
         }
         record = {"version": 0, "op": "create", "meta": meta, "add": [], "remove": []}
         path = os.path.join(root, LOG_DIR, f"{0:020d}.json")
-        tmp = os.path.join(root, LOG_DIR, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(record, f)
-        try:
-            os.link(tmp, path)  # put-if-absent: double create raises
-        except FileExistsError:
-            raise FileExistsError(f"SnapshotTable already exists at {root}") from None
-        finally:
-            os.unlink(tmp)
+        if not claim(path, lambda f: json.dump(record, f)):
+            raise FileExistsError(f"SnapshotTable already exists at {root}")
         return SnapshotTable(spark, root)
 
     # ------------------------------------------------------------------
@@ -408,39 +403,40 @@ class SnapshotTable:
             record_base["txn"] = {"app": txn[0], "version": txn[1]}
         if meta is not None:
             record_base["meta"] = meta
-        while True:
+
+        def attempt():
             if txn is not None and self._txns.get(txn[0], -1) >= txn[1]:
                 return self.version  # already committed (possibly by a peer)
             v = self.version + 1
-            path = self._commit_path(v)
-            tmp = os.path.join(self._log, f".tmp-{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                json.dump({"version": v, **record_base}, f)
-            try:
-                os.link(tmp, path)
-            except FileExistsError:
-                os.unlink(tmp)
-                self._refresh()
-                if op != "append" or meta is not None:
-                    # roll back this attempt: it read state (live files /
-                    # current schema) that a concurrent commit replaced —
-                    # a schema-evolving append does NOT commute. Keyed on
-                    # the OP INTENT, not on a non-empty remove list: an
-                    # overwrite of an empty table, or a merge whose
-                    # touched buckets held no files, still read a
-                    # snapshot and must not silently rebase past a
-                    # concurrent writer (it would leave both row sets
-                    # live / duplicate merged keys)
-                    raise ConcurrentWriteError(
-                        f"{op} at version {v} lost the race to a concurrent "
-                        f"writer (now at {self.version}); re-run on the "
-                        "refreshed table"
-                    ) from None
-                continue  # pure append: commutes, rebase and retry
-            os.unlink(tmp)
-            self._apply({"version": v, **record_base})
-            self._maybe_checkpoint()
-            return v
+            record = {"version": v, **record_base}
+            if claim(self._commit_path(v), lambda f: json.dump(record, f)):
+                self._apply(record)
+                self._maybe_checkpoint()
+                return v
+            self._refresh()
+            if op != "append" or meta is not None:
+                # roll back this attempt: it read state (live files /
+                # current schema) that a concurrent commit replaced —
+                # a schema-evolving append does NOT commute. Keyed on
+                # the OP INTENT, not on a non-empty remove list: an
+                # overwrite of an empty table, or a merge whose
+                # touched buckets held no files, still read a
+                # snapshot and must not silently rebase past a
+                # concurrent writer (it would leave both row sets
+                # live / duplicate merged keys)
+                raise ConcurrentWriteError(
+                    f"{op} at version {v} lost the race to a concurrent "
+                    f"writer (now at {self.version}); re-run on the "
+                    "refreshed table"
+                )
+            # pure append: commutes, rebase and retry
+            return Retry(ConcurrentWriteError(
+                f"{op} lost the race {COMMIT_ATTEMPTS} times in a row "
+                f"(now at {self.version}); concurrent writers are "
+                "committing faster than it can rebase"
+            ))
+
+        return optimistic_commit(attempt)
 
     def _maybe_checkpoint(self) -> None:
         interval = self._meta.get("checkpoint_interval", 10)

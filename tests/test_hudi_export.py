@@ -1707,7 +1707,7 @@ def test_publish_instant_unique_tmp(tmp_path):
         _publish_instant(hdir, name, {"writer": "B"})
     with open(os.path.join(hdir, name)) as f:
         assert _json.load(f) == {"writer": "A"}  # winner's body intact
-    assert [n for n in os.listdir(hdir) if n.endswith(".tmp")] == []
+    assert os.listdir(hdir) == [name]  # no temp debris of either writer
 
 
 def test_restore_preserves_clean_horizon(spark, tmp_path):
